@@ -36,39 +36,29 @@ object Graft {
         spark.experimental.extraOptimizations :+ GraftPruneRule(spark)
   }
 
-  /** Register (or update) the index root for a dataset path. The conf
-    * encoding reserves '=' (key/value separator) and ';' (entry
-    * separator) — paths containing them cannot be registered; failing
-    * fast beats a registry entry that silently never matches. */
-  def registerIndex(spark: SparkSession, dataDir: String, indexRoot: String): Unit = {
-    require(!dataDir.contains("=") && !dataDir.contains(";"),
-      s"dataDir cannot contain '=' or ';' (conf-encoding separators): $dataDir")
-    require(!indexRoot.contains(";"),
-      s"indexRoot cannot contain ';' (conf entry separator): $indexRoot")
-    val key = graft.build.IndexBuilder.canonicalPath(dataDir)
-    val existing = GraftPruneRule.parseRegistry(
-      spark.conf.getOption(GraftPruneRule.IndexesConf))
-    val updated = existing + (key -> indexRoot)
-    spark.conf.set(GraftPruneRule.IndexesConf,
-      updated.map { case (d, i) => s"$d=$i" }.mkString(";"))
-  }
+  /** Register (or update) the postings index root for a dataset path. */
+  def registerIndex(spark: SparkSession, dataDir: String, indexRoot: String): Unit =
+    register(spark, GraftPruneRule.IndexesConf, dataDir, indexRoot)
 
   /** Register (or update) the BLOOM skipping-index root for a dataset
     * path (`BloomIndex.build`'s output): transparent reads then consult
-    * the sketches for conjunct EQ leaves on bloom-covered columns,
-    * composing with any postings-index registration on the same path —
-    * high-cardinality EQ skipping without touching the query. */
-  def registerBloom(spark: SparkSession, dataDir: String, bloomRoot: String): Unit = {
+    * the sketches for EQ leaves on bloom-covered columns, composing with
+    * any postings-index registration on the same path — high-cardinality
+    * EQ skipping without touching the query. */
+  def registerBloom(spark: SparkSession, dataDir: String, bloomRoot: String): Unit =
+    register(spark, GraftPruneRule.BloomIndexesConf, dataDir, bloomRoot)
+
+  /** Add `dataDir -> root` to the registry held in `conf`. The conf
+    * encoding reserves '=' (key/value separator) and ';' (entry
+    * separator) — paths containing them cannot be registered; failing
+    * fast beats a registry entry that silently never matches. */
+  private def register(spark: SparkSession, conf: String, dataDir: String, root: String): Unit = {
     require(!dataDir.contains("=") && !dataDir.contains(";"),
       s"dataDir cannot contain '=' or ';' (conf-encoding separators): $dataDir")
-    require(!bloomRoot.contains(";"),
-      s"bloomRoot cannot contain ';' (conf entry separator): $bloomRoot")
+    require(!root.contains(";"), s"index root cannot contain ';' (conf entry separator): $root")
     val key = graft.build.IndexBuilder.canonicalPath(dataDir)
-    val existing = GraftPruneRule.parseRegistry(
-      spark.conf.getOption(GraftPruneRule.BloomIndexesConf))
-    val updated = existing + (key -> bloomRoot)
-    spark.conf.set(GraftPruneRule.BloomIndexesConf,
-      updated.map { case (d, i) => s"$d=$i" }.mkString(";"))
+    val updated = GraftPruneRule.parseRegistry(spark.conf.getOption(conf)) + (key -> root)
+    spark.conf.set(conf, updated.map { case (d, i) => s"$d=$i" }.mkString(";"))
   }
 
   def read(spark: SparkSession, dataDir: String): DataFrame = {

@@ -162,16 +162,7 @@ object IndexBuilder {
     val cached = descriptorCache.get(indexRoot)
     if (cached != null && cached._1 == sig) return cached._2
     import spark.implicits._
-    // descriptors written before the checksum fields existed read back
-    // with the length+mtime defaults (no rebuild required)
-    val raw = spark.read.parquet(descriptorsDir(indexRoot))
-    val compat = Seq(
-      "checksumAlgorithm" -> lit("length+mtime"),
-      "checksum" -> lit("")
-    ).foldLeft(raw) { case (df, (c, d)) =>
-      if (df.columns.contains(c)) df else df.withColumn(c, d)
-    }
-    val loaded = compat.as[DescriptorRow].collect()
+    val loaded = spark.read.parquet(descriptorsDir(indexRoot)).as[DescriptorRow].collect()
       .map(d => d.sourcePath -> d).toMap
     descriptorCache.put(indexRoot, (sig, loaded))
     loaded
@@ -337,9 +328,12 @@ object IndexBuilder {
   def invalidateDescriptorCache(indexRoot: String): Unit =
     descriptorCache.remove(indexRoot)
 
+  /** THE descriptor row for each of `files`: the freshness fingerprint,
+    * the content checksum when `withChecksums`, the index type and the
+    * key names `columns(file)` it covers. */
   private def descriptorRows(
-      spark: SparkSession, files: Seq[SourceFile], columns: Seq[String],
-      withChecksums: Boolean): Seq[DescriptorRow] =
+      spark: SparkSession, files: Seq[SourceFile], indexType: String,
+      withChecksums: Boolean)(columns: SourceFile => Seq[String]): Seq[DescriptorRow] =
     files.map { f =>
       val (alg, sum) =
         if (!withChecksums) ("length+mtime", "")
@@ -349,11 +343,56 @@ object IndexBuilder {
           fsChecksum(fs, p).getOrElse(("md5", contentMd5(fs, p)))
         }
       DescriptorRow(
-        f.path, f.length, f.modificationTime, columns,
-        graft.model.IndexType.PostingsParquet,
+        f.path, f.length, f.modificationTime, columns(f), indexType,
         graft.model.FileIndexDescriptor.CurrentVersion,
         alg, sum)
     }
+
+  /** The maintenance step the postings and bloom builds share: index
+    * only the files with no fresh descriptor covering `names` (new
+    * files, changed files, or files missing a requested key) — every
+    * file when `overwrite` — by handing them to `write` with the save
+    * mode to use, then rewrite the descriptors. Returns the files
+    * (re)indexed.
+    *
+    * CONTENT-fresh files re-indexed only for ADDED keys keep the union
+    * of descriptor columns: their previous keys' rows are still
+    * gen-valid (same mtime), and dropping the names would silently turn
+    * those columns' queries into full scans (and thrash full rebuilds
+    * when builds alternate key sets). Content-STALE files keep nothing:
+    * their old rows describe the previous bytes. One VERIFIED freshness
+    * decision per file serves both the staleness split and that union —
+    * using the unverified fingerprint for the union would let a
+    * checksum-stale file (mtime-preserving rewrite) keep its old columns
+    * marked indexed under the NEW checksum, permanently laundering the
+    * staleness into wrong pruning. */
+  private[build] def refreshStale(
+      spark: SparkSession,
+      dataDir: String,
+      names: Seq[String],
+      root: String,
+      indexType: String,
+      overwrite: Boolean,
+      withChecksums: Boolean)(
+      write: (Seq[SourceFile], SaveMode) => Unit): Seq[SourceFile] = {
+    val files = listDataFiles(spark, dataDir)
+    val existing = if (overwrite) Map.empty[String, DescriptorRow] else loadDescriptors(spark, root)
+    val verifiedFresh: Map[String, Option[DescriptorRow]] =
+      files.map(f => f.path -> freshDescriptorVerified(spark, existing, f)).toMap
+    val stale = files.filterNot(f =>
+      verifiedFresh(f.path).exists(d => names.forall(d.columns.contains)))
+    if (stale.isEmpty) return Nil
+    write(stale, if (overwrite) SaveMode.Overwrite else SaveMode.Append)
+    val currentPaths = files.map(_.path).toSet
+    val stalePaths = stale.map(_.path).toSet
+    val kept = existing.values.toSeq
+      .filter(d => currentPaths.contains(d.sourcePath) && !stalePaths.contains(d.sourcePath))
+    val refreshed = descriptorRows(spark, stale, indexType, withChecksums) { f =>
+      (verifiedFresh(f.path).map(_.columns).getOrElse(Nil) ++ names).distinct
+    }
+    writeDescriptors(spark, kept ++ refreshed, root)
+    stale
+  }
 
   /** Build (or refresh) the index for `columns` over the parquet dataset
     * at `dataDir`. No-op when fresh unless `overwrite`.
@@ -372,7 +411,8 @@ object IndexBuilder {
       withChecksums)
 
   /** Generalized build over arbitrary [[IndexKeys]] (multi-valued keys
-    * included). Descriptor `columns` records the key names. */
+    * included). Descriptor `columns` records the key names. A build that
+    * is not a no-op rewrites every file's postings. */
   def buildKeyed(
       spark: SparkSession,
       dataDir: String,
@@ -382,11 +422,8 @@ object IndexBuilder {
       overwrite: Boolean = false,
       withChecksums: Boolean = false): Unit = {
     require(keys.nonEmpty, "at least one key to index")
-    val names = keys.map(_._1)
-    if (!overwrite && isFresh(spark, dataDir, indexRoot, names)) return
-    val files = listDataFiles(spark, dataDir)
-    writePostings(postingsFor(spark, files, keys, capBytes), indexRoot, SaveMode.Overwrite)
-    writeDescriptors(spark, descriptorRows(spark, files, names, withChecksums), indexRoot)
+    if (!overwrite && isFresh(spark, dataDir, indexRoot, keys.map(_._1))) return
+    refreshPostings(spark, dataDir, keys, indexRoot, capBytes, overwrite = true, withChecksums)
   }
 
   /** Incrementally index only the files with no fresh descriptor (new
@@ -414,39 +451,16 @@ object IndexBuilder {
       capBytes: Long = DefaultCapBytes,
       withChecksums: Boolean = false): Seq[SourceFile] = {
     require(keys.nonEmpty, "at least one key to index")
-    val names = keys.map(_._1)
-    val files = listDataFiles(spark, dataDir)
-    val existing = loadDescriptors(spark, indexRoot)
-    // one VERIFIED freshness decision per file, shared by the staleness
-    // split and the prevCols union below — using the unverified
-    // fingerprint for prevCols would let a checksum-stale file (mtime-
-    // preserving rewrite) keep its old columns marked indexed while the
-    // refreshed descriptor records the NEW checksum, permanently
-    // laundering the staleness into wrong pruning
-    val verifiedFresh: Map[String, Option[DescriptorRow]] =
-      files.map(f => f.path -> freshDescriptorVerified(spark, existing, f)).toMap
-    val stale = files.filterNot(f =>
-      verifiedFresh(f.path).exists(d => names.forall(d.columns.contains)))
-    if (stale.isEmpty) return Nil
-    writePostings(postingsFor(spark, stale, keys, capBytes), indexRoot, SaveMode.Append)
-    val currentPaths = files.map(_.path).toSet
-    val stalePaths = stale.map(_.path).toSet
-    val kept = existing.values.toSeq
-      .filter(d => currentPaths.contains(d.sourcePath) && !stalePaths.contains(d.sourcePath))
-    // CONTENT-fresh files re-indexed only for ADDED keys keep the union
-    // of descriptor columns — their previous keys' postings are still
-    // gen-valid (same mtime), and dropping the names would silently
-    // turn those columns' queries into full scans. Content-STALE files
-    // keep nothing: their old postings describe the previous bytes.
-    val refreshed = descriptorRows(spark, stale, Seq.empty, withChecksums)
-      .map { d =>
-        val prevCols = verifiedFresh.getOrElse(d.sourcePath, None)
-          .map(_.columns).getOrElse(Seq.empty)
-        d.copy(columns = (prevCols ++ names).distinct)
-      }
-    writeDescriptors(spark, kept ++ refreshed, indexRoot)
-    stale
+    refreshPostings(spark, dataDir, keys, indexRoot, capBytes, overwrite = false, withChecksums)
   }
+
+  private def refreshPostings(
+      spark: SparkSession, dataDir: String, keys: IndexKeys, indexRoot: String,
+      capBytes: Long, overwrite: Boolean, withChecksums: Boolean): Seq[SourceFile] =
+    refreshStale(spark, dataDir, keys.map(_._1), indexRoot,
+      graft.model.IndexType.PostingsParquet, overwrite, withChecksums) { (files, mode) =>
+      writePostings(postingsFor(spark, files, keys, capBytes), indexRoot, mode)
+    }
 
   /** The postings table as a first-class DataFrame (S5: the reference's
     * index-as-input verification path, `ScanUsingIndexJob.java:218-224`). */

@@ -225,8 +225,7 @@ object IndexedQueries extends QueryModule {
   private val q46Sql =
     "SELECT event_id, user_id, event_type FROM events WHERE event_id = 777"
 
-  /** TRANSPARENT bloom pruning (r18 — pre-r18 the sketches were
-    * explicit-path only): a plain `Graft.read(...).filter` on the
+  /** TRANSPARENT bloom pruning: a plain `Graft.read(...).filter` on the
     * high-cardinality bloom-indexed column, with BOTH registries live —
     * the postings index can't answer `event_id` (unindexed column), the
     * bloom registry subtracts every provably-negative file invisibly

@@ -60,13 +60,17 @@ final class GraftPrunedFileIndex(
   *
   * The rule rewrites `Filter(cond, scan(parquet roots))` when at least
   * one root path is registered in the session conf `spark.graft.indexes`
-  * (format `dataDir=indexRoot;...`) and `cond` has a conjunct that
-  * translates into the EQ/AND/OR IR over that root's INDEXED columns.
-  * The relation's [[FileIndex]] is wrapped with a
-  * [[GraftPrunedFileIndex]] that filters out the files each root's
-  * sparse index proves irrelevant. The Filter itself is left in place —
-  * it is the mandatory residual re-check, and Catalyst additionally
-  * pushes it into the parquet reader.
+  * (postings indexes) or `spark.graft.bloomIndexes` (bloom sketches),
+  * format `dataDir=root;...`, and `cond` has a translatable conjunct
+  * tree. Each registered root gets ONE `PrunedScanner.decide` call with
+  * whatever indexes it has: the postings index judges the tree
+  * restricted to that root's INDEXED columns, the sketches judge the
+  * whole tree. A file is excluded iff either proof holds, and the
+  * decision records one report. The relation's [[FileIndex]] is wrapped
+  * with a [[GraftPrunedFileIndex]] that filters out the excluded files.
+  * The Filter itself is left in place — it is the mandatory residual
+  * re-check, and Catalyst additionally pushes it into the parquet
+  * reader.
   *
   * Composition with Spark's native pruning: hive-partitioned layouts
   * (the reference's standard time-partitioned collections,
@@ -79,16 +83,16 @@ final class GraftPrunedFileIndex(
   * never indexed) — dropping conjuncts only widens the file set.
   *
   * Multi-root scans (`spark.read.parquet(dirA, dirB)`) prune each
-  * REGISTERED root with its own index; unregistered roots' files are
+  * REGISTERED root with its own indexes; unregistered roots' files are
   * always kept.
   *
   * Soundness: non-translatable predicates leave the plan untouched
   * (full scan); per-file freshness fallbacks are part of the pruning
-  * decision (`PrunedScanner`); exclusion-oriented subtraction keeps any
-  * file the decision didn't enumerate. Idempotence under the fixed-point
-  * optimizer batch is ensured with a TreeNodeTag (set even when nothing
-  * could be pruned, so the driver-side index lookup runs once, not once
-  * per fixed-point iteration).
+  * decision; exclusion-oriented subtraction keeps any file the decision
+  * didn't enumerate. Idempotence under the fixed-point optimizer batch
+  * is ensured with a TreeNodeTag (set even when nothing could be pruned,
+  * so the driver-side index lookup runs once, not once per fixed-point
+  * iteration).
   *
   * Usage:
   * {{{
@@ -102,28 +106,12 @@ case class GraftPruneRule(spark: SparkSession) extends Rule[LogicalPlan] with Lo
 
   import GraftPruneRule._
 
-  private def registry: Map[String, String] =
-    GraftPruneRule.parseRegistry(spark.conf.getOption(IndexesConf))
-      .map { case (d, i) => normalize(d) -> i }
-
-  /** dataDir → bloomRoot (the high-cardinality EQ skipping sketches,
-    * `spark.graft.bloomIndexes`) — consulted for conjunct EQ leaves on
-    * bloom-covered columns, COMPOSING with the postings-index pruning
-    * above: each index excludes the files it can prove irrelevant, and
-    * the subtractions union (both proofs are independent and sound).
-    * Pre-r18 the sketches were explicit-path only (q46) — a transparent
-    * `Graft.read(...).filter` on a bloom-indexed column full-scanned.
-    * Reference analog: `getSplits` consults whatever index exists per
-    * file, invisibly to the job
-    * (`BlockIndexedFileInputFormat.java:110-187`). */
-  private def bloomRegistry: Map[String, String] =
-    GraftPruneRule.parseRegistry(spark.conf.getOption(BloomIndexesConf))
-      .map { case (d, i) => normalize(d) -> i }
-
-  // the ONE canonical identity function (IndexBuilder's) — a diverging
-  // reimplementation here would silently stop matching registerIndex keys
-  private def normalize(p: String): String =
-    graft.build.IndexBuilder.canonicalPath(p)
+  /** dataDir → root for one registry conf, keyed by the ONE canonical
+    * identity function (IndexBuilder's) — a diverging reimplementation
+    * here would silently stop matching the registered keys. */
+  private def registry(conf: String): Map[String, String] =
+    parseRegistry(spark.conf.getOption(conf))
+      .map { case (d, i) => IndexBuilder.canonicalPath(d) -> i }
 
   /** Identities are scheme-less paths, so the engine can only prune
     * datasets living on the session's DEFAULT filesystem; roots on any
@@ -170,55 +158,32 @@ case class GraftPruneRule(spark: SparkSession) extends Rule[LogicalPlan] with Lo
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case f @ Filter(cond, lr @ LogicalRelation(rel: HadoopFsRelation, _, _, _, _))
-        if lr.getTagValue(PrunedTag).isEmpty && f.getTagValue(PrunedTag).isEmpty &&
-          (registry.nonEmpty || bloomRegistry.nonEmpty) =>
-      val reg = registry
-      val breg = bloomRegistry
-      def rootsIn(m: Map[String, String]): Seq[(String, String)] =
-        rel.location.rootPaths
-          .filter(onDefaultFs)
-          .map(p => normalize(p.toString))
-          .flatMap(r => m.get(r).map(r -> _))
-      val registeredRoots = rootsIn(reg)
-      val bloomRoots = rootsIn(breg)
-      val predOpt =
-        if (registeredRoots.isEmpty && bloomRoots.isEmpty) None
-        else translatableConjuncts(cond)
+        if lr.getTagValue(PrunedTag).isEmpty && f.getTagValue(PrunedTag).isEmpty =>
+      val postingsRoots = registry(IndexesConf)
+      val bloomRoots = registry(BloomIndexesConf)
+      val dataDirs = rel.location.rootPaths
+        .filter(onDefaultFs)
+        .map(p => IndexBuilder.canonicalPath(p.toString))
+        .filter(d => postingsRoots.contains(d) || bloomRoots.contains(d))
+        .distinct
+      val predOpt = if (dataDirs.isEmpty) None else translatableConjuncts(cond)
       predOpt match {
         case Some(fullPred) =>
-          // path -> length, not a bytes accumulator: a file excluded by
-          // BOTH indexes must subtract its size once from the planner's
-          // estimate, not twice
-          val excluded = scala.collection.mutable.Map.empty[String, Long]
-          registeredRoots.foreach { case (dataDir, indexRoot) =>
+          val hasEq = fullPred.leaves.exists(_.isInstanceOf[graft.query.Eq])
+          // path -> length: the planner's size estimate subtracts each
+          // excluded file once
+          val excluded = dataDirs.flatMap { dataDir =>
             // this root's indexed columns = union over its descriptors
             // (freshness is enforced per file inside the decision)
-            val indexedCols = IndexBuilder.loadDescriptors(spark, indexRoot)
-              .values.flatMap(_.columns).toSet
-            restrictTo(fullPred, indexedCols).foreach { pred =>
-              val (excl, report) =
-                PrunedScanner.excludedFiles(spark, dataDir, pred, indexRoot)
-              logInfo(s"GraftPruneRule: $dataDir pred=$pred -> " +
-                s"${report.selectedFiles}+${report.fallbackFiles}/${report.totalFiles} files, " +
-                s"bytes ratio ${report.bytesRatio}")
-              excl.foreach(sf => excluded(sf.path) = sf.length)
+            val postings = postingsRoots.get(dataDir).flatMap { indexRoot =>
+              val indexedCols = IndexBuilder.loadDescriptors(spark, indexRoot)
+                .values.flatMap(_.columns).toSet
+              restrictTo(fullPred, indexedCols).map(p => indexRoot -> Seq(p))
             }
-          }
-          // bloom subtraction composes: ONE whole-predicate decision
-          // per bloom root — a file is excluded when the sketches prove
-          // the full tree false for it (AND: either side; OR: both
-          // sides — so IN-list / OR-of-EQ probes skip too, which
-          // per-conjunct composition cannot see)
-          bloomRoots.foreach { case (dataDir, bloomRoot) =>
-            if (fullPred.leaves.exists(_.isInstanceOf[graft.query.Eq])) {
-              val (excl, report) = graft.build.BloomIndex
-                .excludedFilesForPred(spark, dataDir, fullPred, bloomRoot)
-              logInfo(s"GraftPruneRule(bloom): $dataDir pred=$fullPred -> " +
-                s"${report.selectedFiles}+${report.fallbackFiles}/${report.totalFiles} files, " +
-                s"bytes ratio ${report.bytesRatio}")
-              excl.foreach(sf => excluded(sf.path) = sf.length)
-            }
-          }
+            val bloom = bloomRoots.get(dataDir).filter(_ => hasEq).map(_ -> fullPred)
+            if (postings.isEmpty && bloom.isEmpty) Nil
+            else PrunedScanner.decide(spark, dataDir, postings, bloom).head.excluded
+          }.map(sf => sf.path -> sf.length).toMap
           // tag even when nothing was excluded: the pruning decision is
           // a driver-side job and must not rerun per fixed-point pass.
           // The no-op tag goes on the FILTER (a shared relation node may
@@ -228,7 +193,7 @@ case class GraftPruneRule(spark: SparkSession) extends Rule[LogicalPlan] with Lo
             maybeObserved(cond, lr).getOrElse(f)
           } else {
             val prunedIndex = new GraftPrunedFileIndex(
-              rel.location, excluded.keySet.toSet, excluded.values.sum)
+              rel.location, excluded.keySet, excluded.values.sum)
             val prunedRel = rel.copy(location = prunedIndex)(spark)
             val newLr = lr.copy(relation = prunedRel)
             newLr.setTagValue(PrunedTag, true)
@@ -281,7 +246,7 @@ object GraftPruneRule {
 
   /** Tolerant parse of the `dataDir=indexRoot;...` registry conf —
     * segments without '=' are ignored rather than erroring (shared by
-    * the rule and Graft.registerIndex so both sides agree). */
+    * the rule and Graft's registration so both sides agree). */
   def parseRegistry(conf: Option[String]): Map[String, String] =
     conf.map(_.split(";").filter(_.contains("=")).map { kv =>
       val Array(d, i) = kv.split("=", 2)

@@ -1,10 +1,11 @@
 package graft.query
 
-import graft.build.IndexBuilder
+import graft.build.{BloomIndex, IndexBuilder}
 import graft.intervals.{Block, IntervalOps}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** What the pruner decided, for observability parity with the reference
   * (R10: splits/bytes before and after, pruning wall time —
@@ -46,13 +47,6 @@ object PruneStats {
     nScans = 0; bytesTotal = 0; bytesRead = 0; pruneMs = 0
   }
 
-  /** Raw counters (nScans, bytesBefore, bytesAfter, pruneMs), or None
-    * when no pruned scan ran — for embedding in a consumer's own JSON
-    * (Bench's driver-parsed compact line). */
-  def snapshot(): Option[(Long, Long, Long, Long)] = lock.synchronized {
-    if (nScans == 0) None else Some((nScans, bytesTotal, bytesRead, pruneMs))
-  }
-
   /** Raw cumulative counters, zeros included — for delta accounting: a
     * harness that re-measures queries (Bench's contention retries)
     * subtracts a before-counters from an after-counters to attribute
@@ -74,25 +68,36 @@ object PruneStats {
 }
 
 /** Index-consulting scan pruning — the Spark rebuild of the reference's
-  * `getSplits` (`retrieval/BlockIndexedFileInputFormat.java:110-187`):
-  * evaluate an EQ/AND/OR tree bottom-up over the sparse index
-  * (EQ = postings lookup, AND = interval intersection, OR = capped
-  * union), keep only files whose resulting posting list is non-empty,
-  * and always re-apply the predicate row-level over the survivors.
+  * `getSplits` (`retrieval/BlockIndexedFileInputFormat.java:110-187`),
+  * which consults whatever index a file has in one place. Here that
+  * place is [[decide]]: it lists the dataset once, checks each file's
+  * verified freshness once per index root, gathers evidence from the
+  * roots it is given, and excludes a file iff either proof holds:
   *
-  * Fallback soundness (R3): a file with no fresh descriptor — missing
-  * index, changed length/mtime, or a column of the predicate not
-  * indexed — is scanned in full, exactly like the reference's
-  * checksum-mismatch path (`:338-386`). Pruning can only *drop* work
-  * for provably-non-matching files, never rows.
+  *  - the postings proof: the EQ/AND/OR/BETWEEN tree evaluated
+  *    bottom-up over the file's posting lists ([[qualify]]: EQ =
+  *    postings lookup, AND = interval intersection, OR = capped union)
+  *    is empty;
+  *  - the bloom proof: the file's live sketches prove the tree false
+  *    ([[provablyFalse]]).
   *
-  * Scale shape: the pruning decision runs ONE small Spark job over the
-  * postings table (partition-pruned to the predicate's columns,
-  * value-pruned by parquet min/max thanks to the sorted write) and
-  * collects per-file posting lists to the driver — the same place the
-  * reference prunes (driver-side getSplits). The subsequent data read
-  * lists only surviving files, so at 1000x the files the scan plan
-  * never touches pruned files' footers at all.
+  * Each decision builds, logs and records (in [[PruneStats]]) exactly
+  * one [[PruneReport]]. Every pruned read re-applies the predicate
+  * row-level over the survivors.
+  *
+  * Fallback soundness (R3): a file no index can judge — missing or
+  * stale descriptor (changed length/mtime/checksum), or a predicate
+  * column not covered — is scanned in full, exactly like the
+  * reference's checksum-mismatch path (`:338-386`). Pruning can only
+  * *drop* work for provably-non-matching files, never rows.
+  *
+  * Scale shape: each index answers with ONE small Spark job collected
+  * to the driver — the postings lookup partition-pruned to the
+  * predicate's columns and value-pruned by parquet min/max, the
+  * sketches semi-joined to their live generation — the same place the
+  * reference prunes (driver-side getSplits). The data read then lists
+  * only surviving files, so at 1000x the files the scan plan never
+  * touches pruned files' footers at all.
   */
 object PrunedScanner extends Logging {
 
@@ -117,89 +122,86 @@ object PrunedScanner extends Logging {
     case leaf => leafPostings.getOrElse(leaf, Nil)
   }
 
-  /** The pruning decision alone: which files of `dataDir` must be read
-    * for `pred` (selected-by-index ++ fallback), plus the report. Shared
-    * by the explicit two-phase scan below and the transparent optimizer
-    * rule (graft.plans.GraftPruneRule). */
-  /** Postings-collect safety cap (see selectFilesDetailed). */
+  /** The bloom proof calculus folded through the tree: an EQ leaf whose
+    * live sketch (`sketch(column)`, present only for a fresh, covered
+    * column) is NEGATIVE is provably false for the file (no false
+    * negatives); every other leaf proves nothing; AND is false if
+    * EITHER side is, OR only if BOTH are — so an IN-list / OR-of-EQ
+    * probe excludes every file negative for all its disjuncts. */
+  private def provablyFalse(pred: Pred, sketch: String => Option[BloomFilter]): Boolean =
+    pred match {
+      case Eq(c, v)  => sketch(c).exists(!_.mightContainString(v))
+      case And(l, r) => provablyFalse(l, sketch) || provablyFalse(r, sketch)
+      case Or(l, r)  => provablyFalse(l, sketch) && provablyFalse(r, sketch)
+      case _         => false
+    }
+
+  /** Postings-collect safety cap (see [[decide]]). */
   val MaxCollectedPostings: Int = 1 << 20
 
+  /** One decision's verdict on every listed file: `selected` files are
+    * kept on index evidence, `fallback` files had none and are read in
+    * full, `excluded` files were proven irrelevant. */
+  private[graft] final case class Decision(
+      selected: Seq[IndexBuilder.SourceFile],
+      fallback: Seq[IndexBuilder.SourceFile],
+      excluded: Seq[IndexBuilder.SourceFile],
+      report: PruneReport) {
+    def toRead: Seq[String] = (selected ++ fallback).map(_.path)
+  }
+
+  /** Which files of `dataDir` must be read for `pred` under the
+    * postings index at `indexRoot` (selected-by-index ++ fallback),
+    * plus the report. */
   def selectFiles(
       spark: SparkSession,
       dataDir: String,
       pred: Pred,
       indexRoot: String,
-      capBytes: Long = IndexBuilder.DefaultCapBytes): (Seq[String], PruneReport) =
-    selectFilesBatch(spark, dataDir, Seq(pred), indexRoot, capBytes).head
-
-  /** Batched pruning decision: many predicates against one dataset with
-    * a SINGLE file listing, descriptor read, and postings lookup. This
-    * is what makes a per-key verification sweep (the reference's
-    * ScanUsingIndexJob, one scan per unique key) viable: the driver
-    * work is shared across all keys instead of repeated per key. */
-  def selectFilesBatch(
-      spark: SparkSession,
-      dataDir: String,
-      preds: Seq[Pred],
-      indexRoot: String,
-      capBytes: Long = IndexBuilder.DefaultCapBytes): Seq[(Seq[String], PruneReport)] =
-    selectFilesDetailed(spark, dataDir, preds, indexRoot, capBytes)._2
-      .map { case (sel, fb, report) => (sel ++ fb, report) }
-
-  /** Exclusion-oriented pruning decision for the transparent rule: the
-    * files of `dataDir` PROVABLY irrelevant to `pred` (index-fresh, empty
-    * posting list), plus the report. The rule subtracts these from the
-    * relation's own listing instead of rebuilding it, so a file unknown
-    * to this enumeration (raced in by a concurrent writer, listed by a
-    * different FileIndex snapshot) is read, never silently dropped. */
-  def excludedFiles(
-      spark: SparkSession,
-      dataDir: String,
-      pred: Pred,
-      indexRoot: String,
-      capBytes: Long = IndexBuilder.DefaultCapBytes): (Seq[IndexBuilder.SourceFile], PruneReport) = {
-    val (all, results) = selectFilesDetailed(spark, dataDir, Seq(pred), indexRoot, capBytes)
-    val (sel, fb, report) = results.head
-    val keep = (sel ++ fb).toSet
-    (all.filterNot(f => keep(f.path)), report)
+      capBytes: Long = IndexBuilder.DefaultCapBytes): (Seq[String], PruneReport) = {
+    val d = decide(spark, dataDir, Some(indexRoot -> Seq(pred)), None, capBytes).head
+    (d.toRead, d.report)
   }
 
-  /** Like [[selectFilesBatch]] but keeps index-selected and
-    * freshness-fallback files apart — [[verifyCounts]] needs the
-    * distinction to avoid materializing values x fallback pairs. */
-  private[query] def selectFilesDetailed(
+  /** THE pruning decision. `postings` names a postings index root and
+    * the predicates it judges — one [[Decision]] per predicate, all
+    * sharing ONE listing, descriptor read and postings lookup (what
+    * makes [[verifyCounts]]' per-key sweep viable); `bloom` names a
+    * bloom root and the predicate its sketches judge in every decision.
+    * Without `postings` there is exactly one decision. A file is
+    * excluded iff the postings proof or the bloom proof holds; it falls
+    * back iff neither index can judge it. */
+  private[graft] def decide(
       spark: SparkSession,
       dataDir: String,
-      preds: Seq[Pred],
-      indexRoot: String,
-      capBytes: Long): (Seq[IndexBuilder.SourceFile], Seq[(Seq[String], Seq[String], PruneReport)]) = {
+      postings: Option[(String, Seq[Pred])],
+      bloom: Option[(String, Pred)],
+      capBytes: Long = IndexBuilder.DefaultCapBytes): Seq[Decision] = {
     import spark.implicits._
     val t0 = System.nanoTime()
-
     val files = IndexBuilder.listDataFiles(spark, dataDir)
 
-    // Fresh descriptors covering every predicate column -> file is
-    // prunable. Verified freshness: descriptors built withChecksums also
-    // compare the filesystem content checksum (one metadata-cheap FS
-    // call per file, memoized below via splitByColumns), so an
+    // Verified freshness, once per (file, root): descriptors built
+    // withChecksums also compare the filesystem content checksum, so an
     // mtime-preserving rewrite falls back to a full scan of that file
-    // instead of serving stale postings.
-    val descriptors = IndexBuilder.loadDescriptors(spark, indexRoot)
-    val freshCache = scala.collection.mutable.Map.empty[String, Option[IndexBuilder.DescriptorRow]]
-    def fresh(f: IndexBuilder.SourceFile): Option[IndexBuilder.DescriptorRow] =
-      freshCache.getOrElseUpdate(f.path,
-        IndexBuilder.freshDescriptorVerified(spark, descriptors, f))
+    // instead of serving stale evidence. Maps each fresh file to its
+    // descriptor.
+    def fresh(root: String): Map[String, IndexBuilder.DescriptorRow] = {
+      val descriptors = IndexBuilder.loadDescriptors(spark, root)
+      files.flatMap(f =>
+        IndexBuilder.freshDescriptorVerified(spark, descriptors, f).map(f.path -> _)).toMap
+    }
 
-    // One postings lookup for ALL leaves of ALL predicates at once: the
-    // partition filter on `column` prunes index directories; the value
-    // filter hits parquet min/max on the sorted postings files. EQ
-    // leaves push an exact key; BETWEEN leaves push a decimal-cast
-    // range as a PREFILTER only — the authoritative bound check is the
-    // driver-side exact BigDecimal test in Pred.leafMatches (integral
-    // keys always fit decimal(38,12), so the prefilter never drops a
-    // matching key).
-    val allLeaves = preds.flatMap(_.leaves).distinct
-    val anyPrunable = files.exists(f => fresh(f).isDefined)
+    // Postings evidence: one lookup for ALL leaves of ALL predicates at
+    // once. The partition filter on `column` prunes index directories;
+    // the value filter hits parquet min/max on the sorted postings
+    // files. EQ leaves push an exact key; BETWEEN leaves push a
+    // decimal-cast range as a PREFILTER only — the authoritative bound
+    // check is the driver-side exact BigDecimal test in Pred.leafMatches
+    // (integral keys always fit decimal(38,12), so the prefilter never
+    // drops a matching key).
+    val postingsFresh = postings.fold(Map.empty[String, IndexBuilder.DescriptorRow])(p => fresh(p._1))
+    val allLeaves = postings.toSeq.flatMap(_._2).flatMap(_.leaves).distinct
     def leafFilter(l: Pred): org.apache.spark.sql.Column = l match {
       case Eq(c, v) => col("column") === c && col("value") === v
       case Between(c, lo, hi, _, _) =>
@@ -219,9 +221,9 @@ object PrunedScanner extends Logging {
     // translation time (Pred.MaxInValues).
     var overflow = false
     val hits: Map[(String, Pred), Seq[Block]] =
-      if (allLeaves.isEmpty || !anyPrunable) Map.empty
+      if (allLeaves.isEmpty || postingsFresh.isEmpty) Map.empty
       else {
-        val collected = IndexBuilder.postings(spark, indexRoot)
+        val collected = IndexBuilder.postings(spark, postings.get._1)
           .filter(allLeaves.map(leafFilter).reduce(_ || _))
           .select("file", "column", "value", "ranges", "gen")
           .limit(MaxCollectedPostings + 1)
@@ -235,7 +237,7 @@ object PrunedScanner extends Logging {
         }
         val rows = collected
           .filter { case (f, _, _, _, g) =>
-            descriptors.get(f).exists(_.modificationTime == g) }
+            postingsFresh.get(f).exists(_.modificationTime == g) }
         val byColumn = allLeaves.groupBy {
           case Eq(c, _)               => c
           case Between(c, _, _, _, _) => c
@@ -250,40 +252,57 @@ object PrunedScanner extends Logging {
           .view.mapValues(rs => IntervalOps.normalize(rs.flatMap(_._2).toSeq))
           .toMap
       }
+
+    // Bloom evidence: a file's usable sketches are its fresh
+    // descriptor's covered columns ∩ the predicate's EQ columns.
+    val bloomEqCols = bloom.toSeq.flatMap(_._2.leaves).collect { case Eq(c, _) => c }.toSet
+    val bloomCols: Map[String, Seq[String]] = bloom.fold(Map.empty[String, Seq[String]]) { b =>
+      fresh(b._1).view.mapValues(_.columns.filter(bloomEqCols)).filter(_._2.nonEmpty).toMap
+    }
+    val sketches = bloom.fold(Map.empty[(String, String), BloomFilter]) { b =>
+      BloomIndex.liveSketches(spark, b._1, files.flatMap(f =>
+        bloomCols.getOrElse(f.path, Nil).map(c => (f.path, c, f.modificationTime))))
+    }
+
     // shared listing/lookup time amortized across the batch so summing
     // per-pred pruneTimeMs over a 1000-key sweep doesn't report the one
     // shared lookup a thousand times
-    val sharedMs = (System.nanoTime() - t0) / 1000000 / math.max(preds.size, 1)
+    val postingsPreds = postings.fold(Seq(Option.empty[Pred]))(_._2.map(Some(_)))
+    val sharedMs = (System.nanoTime() - t0) / 1000000 / math.max(postingsPreds.size, 1)
 
-    // the prunable/fallback split depends only on the predicate's
-    // column set — memoized so a per-key sweep (1000s of same-column
-    // predicates) partitions the file list once, not once per key
-    val splitByColumns =
-      scala.collection.mutable.Map.empty[Set[String], (Seq[IndexBuilder.SourceFile], Seq[IndexBuilder.SourceFile])]
-    files -> preds.map { pred =>
+    // the files the postings index can judge depend only on the
+    // predicate's column set — memoized so a per-key sweep (1000s of
+    // same-column predicates) partitions the file list once, not per key
+    val judgedByColumns = scala.collection.mutable.Map.empty[Set[String], Set[String]]
+    postingsPreds.map { postingsPred =>
       val tp = System.nanoTime()
-      val (prunable, fallback) = splitByColumns.getOrElseUpdate(pred.columns,
-        if (overflow) (Seq.empty, files)
-        else files.partition(f =>
-          fresh(f).exists(d => pred.columns.forall(d.columns.contains))))
-      val leaves = pred.leaves.distinct
-      val selected = prunable.filter { f =>
-        val leafMap = leaves.map(l => l -> hits.getOrElse((f.path, l), Nil)).toMap
-        qualify(pred, leafMap, capBytes).nonEmpty
+      val judged = postingsPred.fold(Set.empty[String]) { p =>
+        judgedByColumns.getOrElseUpdate(p.columns,
+          if (overflow) Set.empty
+          else postingsFresh.collect {
+            case (path, d) if p.columns.forall(d.columns.contains) => path }.toSet)
       }
+      val leaves = postingsPred.toSeq.flatMap(_.leaves).distinct
+      val (excluded, kept) = files.partition { f =>
+        postingsPred.exists(p => judged(f.path) && qualify(p,
+          leaves.map(l => l -> hits.getOrElse((f.path, l), Nil)).toMap, capBytes).isEmpty) ||
+          bloom.exists(b => provablyFalse(b._2, c => sketches.get((f.path, c))))
+      }
+      val (sel, fb) = kept.partition(f => judged(f.path) || bloomCols.contains(f.path))
       val report = PruneReport(
         totalFiles = files.size,
-        selectedFiles = selected.size,
-        fallbackFiles = fallback.size,
+        selectedFiles = sel.size,
+        fallbackFiles = fb.size,
         totalBytes = files.map(_.length).sum,
-        selectedBytes = (selected ++ fallback).map(_.length).sum,
+        selectedBytes = kept.map(_.length).sum,
         pruneTimeMs = sharedMs + (System.nanoTime() - tp) / 1000000)
-      logInfo(s"PrunedScan $dataDir pred=$pred: " +
+      logInfo(s"PrunedScan $dataDir postings=${postingsPred.getOrElse("-")} " +
+        s"bloom=${bloom.fold("-")(_._2.toString)}: " +
         s"files ${report.selectedFiles}+${report.fallbackFiles}fallback/${report.totalFiles}, " +
         s"bytes ${report.selectedBytes}/${report.totalBytes} " +
         s"(ratio ${report.bytesRatio}), ${report.pruneTimeMs} ms")
       PruneStats.record(report)
-      (selected.map(_.path), fallback.map(_.path), report)
+      Decision(sel, fb, excluded, report)
     }
   }
 
@@ -296,14 +315,27 @@ object PrunedScanner extends Logging {
       pred: Pred,
       indexRoot: String,
       capBytes: Long = IndexBuilder.DefaultCapBytes,
+      residual: Option[org.apache.spark.sql.Column] = None): (DataFrame, PruneReport) =
+    prunedScan(spark, dataDir, pred, Some(indexRoot), None, capBytes, residual)
+
+  /** The one pruned read: decide under the given roots, read the kept
+    * files (or an empty frame of the dataset's schema) and apply the
+    * mandatory row-level residual. */
+  private[graft] def prunedScan(
+      spark: SparkSession,
+      dataDir: String,
+      pred: Pred,
+      indexRoot: Option[String],
+      bloomRoot: Option[String],
+      capBytes: Long = IndexBuilder.DefaultCapBytes,
       residual: Option[org.apache.spark.sql.Column] = None): (DataFrame, PruneReport) = {
     val schema = spark.read.parquet(dataDir).schema
     // Between pruning is proven sound only for INTEGRAL columns (their
     // stringified keys round-trip exactly through BigDecimal); on any
-    // other column type — or one absent from the schema — skip pruning
-    // entirely and let the residual do the work over a full scan. The
-    // Catalyst translation only ever produces integral Betweens; this
-    // guards hand-built predicates.
+    // other column type — or one absent from the schema — the postings
+    // index is not consulted and the residual does the work over a full
+    // scan. The Catalyst translation only ever produces integral
+    // Betweens; this guards hand-built predicates.
     def integral(t: org.apache.spark.sql.types.DataType): Boolean = t match {
       case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
@@ -314,14 +346,13 @@ object PrunedScanner extends Logging {
         !schema.find(_.name == c).exists(f => integral(f.dataType))
       case _ => false
     }
-    val (toRead, report) =
-      if (betweenUnsound) {
-        logWarning(s"PrunedScan $dataDir: BETWEEN over a non-integral column " +
-          s"in $pred — index pruning skipped, scanning fully")
-        val files = IndexBuilder.listDataFiles(spark, dataDir)
-        (files.map(_.path), PruneReport(files.size, 0, files.size,
-          files.map(_.length).sum, files.map(_.length).sum, 0))
-      } else selectFiles(spark, dataDir, pred, indexRoot, capBytes)
+    if (betweenUnsound)
+      logWarning(s"PrunedScan $dataDir: BETWEEN over a non-integral column " +
+        s"in $pred — index pruning skipped, scanning fully")
+    val decision = decide(spark, dataDir,
+      indexRoot.filterNot(_ => betweenUnsound).map(_ -> Seq(pred)),
+      bloomRoot.map(_ -> pred), capBytes).head
+    val toRead = decision.toRead
     val df =
       if (toRead.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -338,7 +369,7 @@ object PrunedScanner extends Logging {
       case Some(n) => ScanMetrics.observed(df, resCol, name = n)
       case None => df.filter(resCol)
     }
-    (filtered, report)
+    (filtered, decision.report)
   }
 
   def scan(spark: SparkSession, dataDir: String, pred: Pred, indexRoot: String): DataFrame =
@@ -367,8 +398,8 @@ object PrunedScanner extends Logging {
     val values = IndexBuilder.postings(spark, indexRoot)
       .filter(col("column") === column)
       .select("value").distinct().as[String].collect().sorted.toIndexedSeq
-    val sets = selectFilesDetailed(
-      spark, dataDir, values.map(v => Eq(column, v): Pred), indexRoot, capBytes)._2
+    val sets = decide(spark, dataDir,
+      Some(indexRoot -> values.map(v => Eq(column, v): Pred)), None, capBytes)
     // Index-SELECTED (value, file) pairs only: their count is bounded by
     // the postings rows the driver already holds. FALLBACK files (same
     // set for every key — the split depends only on the column) are
@@ -376,10 +407,10 @@ object PrunedScanner extends Logging {
     // fallback file counts toward its own value, exactly what the
     // per-key loop's residual filter would do, restricted to keys the
     // index knows.
-    val selMembership = values.zip(sets).flatMap { case (v, (sel, _, _)) =>
-      sel.map(f => (v, f)) }
-    val fallbackFiles = sets.headOption.map(_._2).getOrElse(Nil)
-    val selFiles = sets.flatMap(_._1).distinct
+    val selMembership = values.zip(sets).flatMap { case (v, d) =>
+      d.selected.map(f => (v, f.path)) }
+    val fallbackFiles = sets.headOption.map(_.fallback.map(_.path)).getOrElse(Nil)
+    val selFiles = sets.flatMap(_.selected.map(_.path)).distinct
     val valuesDf = spark.createDataset(values).toDF("value")
     val schema = spark.read.parquet(dataDir).schema
     val canon = selFiles.headOption

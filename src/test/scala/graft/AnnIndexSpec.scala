@@ -710,9 +710,12 @@ class AnnIndexSpec extends AnyFunSuite {
     val q = emb.filter(col("vec_id") < 3)
     val fromIndex = AnnIndex.ivfTopKFromIndex(spark, idx, emb, q, 5, nprobe = 8)
     fromIndex.collect()
-    // the ONLY embeddings scan in the probe plan is the broadcast-small
-    // query side; the corpus side reads its vectors from the index's
-    // probed partitions (pre-r16: a second corpus scan + id-keyed join)
+    // the corpus side reads its vectors from the index's probed
+    // partitions (pre-r16: a second corpus scan + id-keyed join); the
+    // query side is collected and re-planned as a local relation when
+    // it fits the localize cap (4096 rows), so a 3-row probe scans the
+    // corpus parquet NOT AT ALL, and a query set past the cap keeps the
+    // distributed shape, whose ONLY corpus scan is the query side
     def scans(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -725,15 +728,24 @@ class AnnIndexSpec extends AnyFunSuite {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(scans)
     }
-    val all = scans(fromIndex.queryExecution.executedPlan)
     def path(f: org.apache.spark.sql.execution.FileSourceScanExec): String =
       f.relation.location.rootPaths.mkString(",")
-    val embScans = all.count(path(_).contains("embeddings.parquet"))
+    def embScans(df: DataFrame): Seq[String] =
+      scans(df.queryExecution.executedPlan).map(path).filter(_.contains("embeddings.parquet"))
+    val all = scans(fromIndex.queryExecution.executedPlan)
     val idxScans = all.count(path(_).contains("ivf_selfserve"))
-    assert(embScans == 1,
-      s"probe must scan the corpus ONCE (the query side), got $embScans:\n" +
-        all.map(path).mkString("\n"))
+    assert(embScans(fromIndex).isEmpty,
+      s"a localized probe must not scan the corpus, got:\n" + all.map(path).mkString("\n"))
     assert(idxScans >= 1, "probe must read vectors from the index partitions")
+    // past the cap: the corpus replicated under distinct ids (9 x 500
+    // rows > 4096)
+    val bigQ = emb.crossJoin(spark.range(9).toDF("rep"))
+      .select((col("vec_id") + col("rep") * 1000000L).as("vec_id"), col("embedding"))
+    val distributed = AnnIndex.ivfTopKFromIndex(spark, idx, emb, bigQ, 5, nprobe = 8)
+    distributed.collect()
+    assert(embScans(distributed).size == 1,
+      "past the localize cap the probe must scan the corpus ONCE (the query side), got:\n" +
+        embScans(distributed).mkString("\n"))
     // and the self-served probe equals the registered q45 in-query build
     assert(topk(fromIndex) == topk(Ann.ivfTopK(emb, q, 5, nlist = 16, nprobe = 8)),
       "index-served vectors diverged from the registered build")

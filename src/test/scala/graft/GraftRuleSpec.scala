@@ -216,10 +216,13 @@ class GraftRuleSpec extends AnyFunSuite {
       val full = scanFileCount(spark.read.parquet(dataDir))
       // bloom alone: event_id is NOT postings-indexed, so the pre-r18
       // rule full-scanned this shape
+      val decisions0 = graft.query.PruneStats.counters()._1
       val viaBloom = spark.read.parquet(dataDir)
         .filter(col("event_id") === lit(probe))
       assert(scanFileCount(viaBloom) < full,
         "a bloom-registered EQ must shrink the transparent listing")
+      assert(graft.query.PruneStats.counters()._1 - decisions0 == 1,
+        "a transparent bloom decision must record exactly one report")
       // row-set equivalence against the unregistered scan
       spark.conf.unset(GraftPruneRule.BloomIndexesConf)
       spark.conf.unset(GraftPruneRule.IndexesConf)
@@ -235,6 +238,10 @@ class GraftRuleSpec extends AnyFunSuite {
         .filter(col("event_type") === "error" && col("event_id") === lit(probe))
       val typeOnly = spark.read.parquet(dataDir)
         .filter(col("event_type") === "error")
+      val decisions1 = graft.query.PruneStats.counters()._1
+      both.queryExecution.executedPlan
+      assert(graft.query.PruneStats.counters()._1 - decisions1 == 1,
+        "a read pruned by both indexes must record exactly one report")
       assert(scanFileCount(both) <= math.min(
         scanFileCount(typeOnly), scanFileCount(viaBloom)),
         "composed pruning must subtract both indexes' exclusions")
